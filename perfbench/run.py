@@ -28,6 +28,7 @@ import argparse
 import json
 import os
 import random
+import shutil
 import statistics
 import subprocess
 import sys
@@ -259,7 +260,8 @@ def run(args) -> dict:
             tracer, os.path.join(workdir, "eventlog"),
             untraced=untraced, ops=ops, session_s=session_s, drift=drift, facts=facts,
         )
-        tracer.dump(os.path.join(workdir, "trace.json"))
+        os.makedirs(os.path.join(BUILD, "traces"), exist_ok=True)
+        tracer.dump(os.path.join(BUILD, "traces", f"{stamp}.json"))
         layers.write_counts(os.path.join(BUILD, "counts", f"{stamp}.json"), args.workload, counts)
     else:
         lat = [o["ms"] for o in done]
@@ -271,6 +273,9 @@ def run(args) -> dict:
         # a run has too few operations for a steady p90 (fewer than ten
         # beyond it): reported in the detail line, not as a metric
         detail["latency_p90_ms"] = p90(lat)
+    # the warehouses, event log and Spark scratch space of a run are
+    # tens of MB each; the results, spans and counts are kept
+    shutil.rmtree(workdir, ignore_errors=True)
     return {
         "detail": detail,
         "result": {
