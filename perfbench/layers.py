@@ -70,6 +70,12 @@ def _within(t: float, span: dict) -> bool:
     return span["start_ms"] <= t <= span["end_ms"]
 
 
+def _commits_in(commit_times: list[int], span: dict) -> int:
+    """Commits whose time (whole ms) falls inside ``span``."""
+    lo, hi = int(span["start_ms"]), span["end_ms"]
+    return sum(1 for t in commit_times if lo <= t <= hi)
+
+
 def per_op_counts(tracer, log: dict) -> dict[str, dict]:
     """Work counts of every traced operation, from the event log and
     the spans: jobs, stages and tasks launched, stage metrics summed,
@@ -78,10 +84,7 @@ def per_op_counts(tracer, log: dict) -> dict[str, dict]:
     for job in log["jobs"].values():
         if job["op"] is not None:
             jobs_by_op.setdefault(job["op"], []).append(job)
-    commits: dict[str, int] = {}
-    for s in tracer.spans:
-        if s["layer"] == "catalog.commit" and s["op"] is not None:
-            commits[s["op"]] = commits.get(s["op"], 0) + 1
+    commit_times = tracer.commit_times()
     out = {}
     for op, rec in tracer.ops.items():
         jobs = jobs_by_op.get(op, [])
@@ -92,7 +95,7 @@ def per_op_counts(tracer, log: dict) -> dict[str, dict]:
             "jobs": len(jobs),
             "stages": len(stages),
             "tasks": sum(st["tasks"] for st in stages),
-            "commits": commits.get(op, 0),
+            "commits": _commits_in(commit_times, rec) if "end_ms" in rec else 0,
             "files_written": rec.get("files_written", 0),
             "bytes_written": rec.get("bytes_written", 0),
         }
@@ -145,7 +148,7 @@ def per_layer(tracer, evdir: str, untraced: list[dict], ops: list[dict],
         "engine.sql_ms": span_ms("engine.sql"),
         "engine.session_open_ms": span_ms("engine.session_open"),
         "catalog.commits": over_ops("commits"),
-        "catalog.commit_ms": span_ms("catalog.commit"),
+        "catalog.commit_ms": span_ms("catalog.write"),
         "catalog.bytes_written": over_ops("bytes_written"),
         "catalog.files_written": over_ops("files_written"),
         "catalog.files_live": facts.get("files_live", 0),
@@ -195,11 +198,9 @@ def per_layer(tracer, evdir: str, untraced: list[dict], ops: list[dict],
         return _med(per_span)
 
     m["plans.jobs"] = jobs_inside("plans.run")
-    m["sqldml.commits"] = _med(
-        sum(1 for c in spans.get("catalog.commit", [])
-            if c["op"] == s["op"] and _within(c["start_ms"], s))
-        for s in spans.get("sqldml.dispatch", [])
-    )
+    commit_times = tracer.commit_times()
+    m["sqldml.commits"] = _med(_commits_in(commit_times, s)
+                               for s in spans.get("sqldml.dispatch", []) if s["op"] is not None)
     base = _med(o["ms"] for o in untraced if o["ok"])
     traced = _med(o["ms"] for o in ops if o["ok"])
     m["trace.overhead_pct"] = (traced / base - 1.0) * 100.0 if base else 0.0

@@ -5,9 +5,10 @@
 
 Run from the repository root. The first run in a checkout generates
 the datasets and caches the oracle answers under ``.bench_build/``.
-A run starts the Spark session, sets the workload up three times (the
-median is the set-up time), warms up (every result checked), probes
-the job-launch latency and then measures.
+A run loads what the workload checks against (oracle answers, replay
+base, numpy columns), then starts the Spark session and sets the
+workload up once (together, the set-up time), warms up (every result
+checked), probes the job-launch latency and then measures.
 
 ``--trace 0`` measures the end-to-end metrics with no tracing. The
 last line of standard output is one JSON object with the keys
@@ -38,14 +39,16 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build", "perfbench")
 WORKLOADS = ("headline", "wire_sessions", "cdc_lakehouse")
-DEFAULT_SF = 0.1
-# the headline warm-up pass runs on this small dataset: compiling the
-# JVM's hot paths costs the same at any size, executing them does not
-WARM_SF = 0.001
-# workload set-up is repeated and its median kept; the session start
-# (a JVM launch) happens once per process
-SETUP_REPEATS = 3
+# dataset scale factor per workload. A headline pass takes about 8 s
+# at sf0.01 against 13 to 20 s at sf0.1 on a 4-core host (per-query
+# planning and job costs dominate), and the 70 runs the benchmark is
+# measured with have to fit in under an hour
+DEFAULT_SF = {"headline": 0.01, "wire_sessions": 0.1, "cdc_lakehouse": 0.1}
 PROBE_JOBS = 9
+# a fixed-size heap: a heap that grew as needed made the same work
+# take a different time in each run; bounded, as the host's memory
+# is shared
+HEAP = "4g"
 
 
 def median(values) -> float:
@@ -99,13 +102,12 @@ def jvm_peak_rss_mb(spark) -> float:
 
 
 class Context:
-    """What a workload receives: the session, the measured and warm-up
-    datasets, the run's seed and a scratch directory of its own."""
+    """What a workload receives: the session, the dataset, the run's
+    seed and a scratch directory of its own."""
 
-    def __init__(self, spark, sf_dir: str, warm_dir: str, seed: int, workdir: str, tracer):
+    def __init__(self, spark, sf_dir: str, seed: int, workdir: str | None, tracer):
         self.spark = spark
         self.sf_dir = sf_dir
-        self.warm_dir = warm_dir
         self.seed = seed
         self.workdir = workdir
         self.tracer = tracer
@@ -131,9 +133,6 @@ def _prepare_env(workdir: str) -> None:
     tmp = os.path.join(workdir, "tmp")
     os.makedirs(tmp, exist_ok=True)
     os.environ["TMPDIR"] = tmp
-    # a bounded heap: the machine's memory is shared, and the peak RSS
-    # is reported as a per-layer number
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 
 def _spark_conf(workdir: str, trace: bool) -> dict[str, str]:
@@ -141,10 +140,9 @@ def _spark_conf(workdir: str, trace: bool) -> dict[str, str]:
         "spark.local.dir": os.path.join(workdir, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(workdir, "spark-warehouse"),
         "spark.ui.showConsoleProgress": "false",
+        "spark.driver.memory": HEAP,
         "spark.driver.extraJavaOptions": (
-            # a fixed-size heap: a heap that grows run by run made the
-            # same work take a different time in each run
-            f"-Xms{os.environ['SPARK_GRAFT_DRIVER_MEM']} "
+            f"-Xms{HEAP} "
             "-Duser.timezone=UTC "
             f"-Djava.io.tmpdir={os.path.join(workdir, 'tmp')} "
             f"-Dderby.system.home={workdir}"
@@ -166,14 +164,8 @@ def run(args) -> dict:
     except ImportError as exc:
         raise SystemExit(f"perfbench: cannot import the program: {exc}")
     import datagen
-    import oracle
 
-    from headline import HEADLINE
-
-    sf_dir, warm_dir = (datagen.ensure_dataset(os.path.join(BUILD, "data"), sf)
-                        for sf in (args.sf, WARM_SF))
-    for d in (sf_dir, warm_dir):
-        oracle.answers(d, HEADLINE)
+    sf_dir = datagen.ensure_dataset(os.path.join(BUILD, "data"), args.sf)
     stamp = f"{args.workload}-seed{args.seed}-trace{args.trace}-{os.getpid()}"
     workdir = os.path.join(BUILD, "runs", stamp)
     os.makedirs(workdir, exist_ok=True)
@@ -182,35 +174,32 @@ def run(args) -> dict:
         "nproc": os.cpu_count(),
         "loadavg_1m": os.getloadavg()[0],
     }
+    ctx = Context(None, sf_dir, args.seed, workdir, None)
+    wl = _workload(args.workload)(ctx)
+    wl.prepare(sf_dir)  # the benchmark's own inputs, not the client's cost
 
-    # -- set-up: program import, session start, workload set-up -------
+    # -- set-up: session start, then the workload's set-up -------------
     t0 = time.perf_counter()
     from konohadataplatform_spark.session import get_spark
 
     spark = get_spark(app_name="perfbench", extra_conf=_spark_conf(workdir, bool(args.trace)))
     session_s = time.perf_counter() - t0
     spark.sparkContext.setLogLevel("ERROR")
-    tracer = None
+    ctx.spark = spark
     if args.trace:
         import tracing
 
-        tracer = tracing.Tracer(spark.sparkContext)
+        ctx.tracer = tracer = tracing.Tracer(spark.sparkContext)
         tracing.install(tracer)
-    ctx = Context(spark, sf_dir, warm_dir, args.seed, workdir, tracer)
-    wl = _workload(args.workload)(ctx)
     phases = {"build_s": t0 - t_start, "session_s": session_s}
     try:
-        setup_times = []
-        if tracer:  # set-up spans: SessionEngine construction, catalog writes
+        if args.trace:  # set-up spans: SessionEngine construction, catalog writes
             tracer.enabled = True
-        for i in range(SETUP_REPEATS):
-            if i:
-                wl.teardown()
-            t1 = time.perf_counter()
-            wl.setup(sf_dir)
-            setup_times.append(time.perf_counter() - t1)
-        setup_s = session_s + median(setup_times)
-        if tracer:
+        t1 = time.perf_counter()
+        wl.setup(sf_dir)
+        phases["setup_s"] = time.perf_counter() - t1
+        setup_s = time.perf_counter() - t0
+        if args.trace:
             tracer.enabled = False
         t1 = time.perf_counter()
         checks = wl.warm()  # untimed, every result checked
@@ -242,7 +231,7 @@ def run(args) -> dict:
     failed = checks["failed"] + sum(1 for o in every if not o["ok"])
     attempted = checks["attempted"] + len(every)
     detail = {
-        "workload": args.workload, "seed": args.seed, "sf": args.sf, "setup_repeats_s": setup_times,
+        "workload": args.workload, "seed": args.seed, "sf": args.sf,
         "drift": drift, "phases": phases,
         "kind_p50_ms": {k: median(o["ms"] for o in done if o["kind"] == k)
                         for k in sorted({o["kind"] for o in done})},
@@ -293,9 +282,11 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf", type=float, default=DEFAULT_SF,
-                    help="dataset scale factor (default 0.1)")
+    ap.add_argument("--sf", type=float, default=None,
+                    help="dataset scale factor (default: the workload's DEFAULT_SF)")
     args = ap.parse_args(argv)
+    if args.sf is None:
+        args.sf = DEFAULT_SF[args.workload]
     sys.path.insert(0, ROOT)
     out = run(args)
     os.makedirs(os.path.join(BUILD, "results"), exist_ok=True)

@@ -6,7 +6,7 @@
 Each file is a counts file a traced run writes under
 ``.bench_build/perfbench/counts/``; compare runs of one workload with
 one seed, so they run the same operations. For every operation kind
-(a query, a statement kind, a CDC cycle) and every count (jobs,
+(a query, a statement kind, a kind of CDC operation) and every count (jobs,
 stages, tasks, commits, files and bytes written) the report says
 whether every operation present in all runs read the same value. A
 later change may claim a count only if it is on the exact list.

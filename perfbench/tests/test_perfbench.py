@@ -36,7 +36,7 @@ def sf_dir():
 
 
 def _ctx(seed: int, sf_dir: str) -> run.Context:
-    return run.Context(None, sf_dir, sf_dir, seed, None, None)
+    return run.Context(None, sf_dir, seed, None, None)
 
 
 def _statements(seed: int, sf_dir: str) -> bytes:

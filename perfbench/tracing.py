@@ -4,12 +4,14 @@ The program is not edited. In a traced run the benchmark wraps the
 public entry points of the layers it measures (``Engine.sql``,
 ``SessionEngine`` construction, ``CdcPipeline.apply_envelopes``,
 ``Pipeline.run``, ``sqldml.dispatch`` and the ``SnapshotCatalog`` read
-and commit methods) with a function that records a span: layer name,
-operation id, start and end. An operation's thread carries the Spark
-local property ``perfbench.op``, so every job it launches is
-attributed to the operation in the Spark event log, which is parsed
-when the run ends; a job belongs to a layer when it starts inside one
-of the layer's spans of the same operation.
+and write methods) with a function that records a span: layer name,
+operation id, start and end. Catalog commits are counted from the
+catalogs' own history: every commit path, whichever method it starts
+from, logs a snapshot with its commit time. An operation's thread
+carries the Spark local property ``perfbench.op``, so every job it
+launches is attributed to the operation in the Spark event log, which
+is parsed when the run ends; a job belongs to a layer when it starts
+inside one of the layer's spans of the same operation.
 
 An operation id comes from the workload (``Tracer.op``) or, on the
 server side of a wire door, from the ``/* bench:<id> */`` tag the
@@ -49,6 +51,8 @@ class Tracer:
         self.enabled = False
         self.spans: list[dict] = []
         self.ops: dict[str, dict] = {}
+        # warehouse -> SnapshotCatalog, every catalog the run opened
+        self.catalogs: dict[str, object] = {}
         self._local = threading.local()
         self._lock = threading.Lock()
 
@@ -57,6 +61,12 @@ class Tracer:
         if not hasattr(self._local, "props"):
             self._local.props = {}
         return self._local.props
+
+    def _inside(self) -> set:
+        """The layers this thread is inside a span of."""
+        if not hasattr(self._local, "inside"):
+            self._local.inside = set()
+        return self._local.inside
 
     def _set(self, key: str, value: str | None) -> str | None:
         props = self._props()
@@ -88,10 +98,13 @@ class Tracer:
                 self.ops[op_id] = rec
 
     # -- spans around layer entry points -------------------------------
-    def wrap(self, owner, attr: str, layer: str, op_from_sql: bool = False) -> None:
+    def wrap(self, owner, attr: str, layer: str, op_from_sql: bool = False,
+             outermost: bool = False) -> None:
         """Replace ``owner.attr`` with a span-recording wrapper. With
         ``op_from_sql`` a statement's ``/* bench:<id> */`` tag names
-        the operation."""
+        the operation; with ``outermost`` a call made inside another
+        span of the same layer (one write method calling another)
+        records no span of its own."""
         fn = getattr(owner, attr)
         tracer = self
 
@@ -99,6 +112,11 @@ class Tracer:
         def traced(*args, **kwargs):
             if not tracer.enabled:
                 return fn(*args, **kwargs)
+            if outermost:
+                inside = tracer._inside()
+                if layer in inside:
+                    return fn(*args, **kwargs)
+                inside.add(layer)
             op = tracer.current_op()
             if op_from_sql:
                 sql = next((a for a in args if isinstance(a, str)), "")
@@ -113,15 +131,32 @@ class Tracer:
             try:
                 return fn(*args, **kwargs)
             finally:
+                if outermost:
+                    inside.discard(layer)
                 span = {"layer": layer, "op": op, "start_ms": t0, "end_ms": now_ms()}
                 with tracer._lock:
                     tracer.spans.append(span)
 
         setattr(owner, attr, traced)
 
+    def commit_times(self) -> list[int]:
+        """Commit time (ms) of every snapshot in every catalog the run
+        opened, read from the catalogs' public history."""
+        return sorted(snap.timestamp_ms for cat in self.catalogs.values()
+                      for table in cat.tables() for snap in cat.history(table))
+
     def dump(self, path: str) -> None:
         with open(path, "w", encoding="utf-8") as fh:
             json.dump({"spans": self.spans, "ops": self.ops}, fh)
+
+
+# the SnapshotCatalog methods that commit a snapshot
+CATALOG_WRITES = (
+    "write", "merge", "merge_partitioned", "delete_by_keys", "append_rows",
+    "upsert_by_keys", "delete_where", "publish", "publish_all", "write_transformed",
+    "rollback", "create_branch", "fast_forward", "compact", "maintain",
+    "add_column", "rename_column", "drop_column",
+)
 
 
 def install(tracer: Tracer) -> None:
@@ -137,10 +172,17 @@ def install(tracer: Tracer) -> None:
     tracer.wrap(CdcPipeline, "apply_envelopes", "cdc.apply")
     tracer.wrap(Pipeline, "run", "plans.run")
     tracer.wrap(SnapshotCatalog, "read", "catalog.read")
-    # every catalog write path (write, merge, upsert, delete, compact
-    # and the CDC apply's full rewrite) funnels into _commit, which
-    # writes the snapshot's files and swaps the pointer
-    tracer.wrap(SnapshotCatalog, "_commit", "catalog.commit")
+    for method in CATALOG_WRITES:
+        tracer.wrap(SnapshotCatalog, method, "catalog.write", outermost=True)
+
+    init = SnapshotCatalog.__init__
+
+    @functools.wraps(init)
+    def watched(cat, *args, **kwargs):
+        init(cat, *args, **kwargs)
+        tracer.catalogs.setdefault(os.path.abspath(cat.warehouse), cat)
+
+    SnapshotCatalog.__init__ = watched
 
 
 # -- event log -------------------------------------------------------------

@@ -308,14 +308,15 @@ class WireSessions:
         self.ctx = ctx
         self.clients = min(len(DOORS), os.cpu_count() or 1)
         self.doors = DOORS[: self.clients]
-        self.datasets: dict[str, Dataset] = {}
         self.measured_s = 0.0
         self.reconnect_ms: list[float] = []
-        self._setups = 0
         self._rounds = 0
         self._lock = threading.Lock()
         self.servers = []
         self.conns = {}
+
+    def prepare(self, sf_dir: str) -> None:
+        self.ds = Dataset(sf_dir)
 
     def setup(self, sf_dir: str) -> None:
         from konohadataplatform_spark.catalog import SnapshotCatalog
@@ -327,11 +328,7 @@ class WireSessions:
         from pyspark.sql import functions as F
 
         spark = self.ctx.spark
-        self._setups += 1
-        if sf_dir not in self.datasets:
-            self.datasets[sf_dir] = Dataset(sf_dir)
-        self.ds = self.datasets[sf_dir]
-        wh = os.path.join(self.ctx.workdir, f"warehouse{self._setups}")
+        wh = os.path.join(self.ctx.workdir, "warehouse")
         eng = Engine(spark, SnapshotCatalog(spark, wh))
         eng.register_star_schema(sf_dir)
         orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
