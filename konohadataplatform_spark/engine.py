@@ -12,10 +12,17 @@ property the reference gets from the shared Hive Metastore.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from konohadataplatform_spark.session import get_spark
 from konohadataplatform_spark.sources.star_schema import register_views
+
+# one backquoted identifier in a TableIdentifier's quotedString (a
+# literal backtick inside the name is doubled)
+_QUOTED_IDENT = re.compile(r"`((?:[^`]|``)*)`")
 
 
 class Engine:
@@ -36,6 +43,32 @@ class Engine:
         # registration; engine-internal registrations go through
         # _register_view and stay sync-managed)
         self._user_views: set[str] = set()
+        # (sf_dir, parquet file schemas) per register_star_schema call,
+        # replayed by SessionEngine clones without schema inference
+        self._star_schemas: list[tuple[str, dict[str, StructType]]] = []
+
+    def _local_temp_views(self) -> set[str]:
+        """Lower-cased names of this session's LOCAL temp views —
+        global-temp and metastore tables excluded (catalog.tableExists
+        would match those, and they must not shadow a catalog table).
+        Spark stores temp view names lowercased, so membership tests
+        must casefold or a catalog table named 'Events' would skip the
+        user-claim branch for the user's 'events' view.
+
+        Asks the JVM SessionCatalog directly: one call, no Spark job.
+        ``spark.catalog.listTables()`` is avoided on purpose — PySpark
+        runs it as ``toLocalIterator`` jobs (three per call on PySpark
+        4.1.2 with a dozen views), which made the listing the largest
+        fixed cost of every statement."""
+        listed = (
+            self.spark._jsparkSession.sessionState()
+            .catalog()
+            .listLocalTempViews("*")
+            .mkString(",")
+        )
+        return {
+            m.replace("``", "`").lower() for m in _QUOTED_IDENT.findall(listed)
+        }
 
     def _engine_owned_views(self) -> dict[str, int | None]:
         """Names registered via ANY Engine's _register_view on this
@@ -75,24 +108,20 @@ class Engine:
         version this engine's session has not seen — so a table
         CREATEd or MERGEd through ANY session over the same warehouse
         (a wire-door SessionEngine clone, another Engine) is queryable
-        here at its latest committed version. Metadata-only: one
-        pointer-file read per table per statement. r12: hoisted from
+        here at its latest committed version. r12: hoisted from
         SessionEngine so the BASE engine is symmetric with its clones
         (previously a door CTAS was visible to every NEW door session
-        but not to Engine.sql on the base engine itself)."""
+        but not to Engine.sql on the base engine itself).
+
+        A statement whose tables are all up to date launches no Spark
+        job here: the temp-view listing is a driver-side catalog call
+        (see :meth:`_local_temp_views`) and each table costs one
+        pointer-file read. Only a table with an unseen version is
+        re-registered, and that ``catalog.read`` infers the snapshot's
+        parquet schema with one job."""
         if self.catalog is None:
             return
-        # LOCAL temp views only: catalog.tableExists also matches
-        # global-temp and metastore tables, which must not shadow a
-        # catalog table (r13 ADVICE). namespace==[] excludes both.
-        # Spark stores temp view names LOWERCASED — membership tests
-        # must casefold or a catalog table named 'Events' would skip
-        # the user-claim branch for the user's 'events' view
-        local_temps = {
-            v.name.lower()
-            for v in self.spark.catalog.listTables()
-            if v.isTemporary and not v.namespace
-        }
+        local_temps = self._local_temp_views()
         owned = self._engine_owned_views()
         # prune ownership of views that no longer exist: a user who
         # DROPs an engine-synced view and later recreates the name
@@ -193,13 +222,21 @@ class Engine:
         self._user_views.discard(name)
         self._engine_owned_views()[name] = self._view_hash(name)
 
-    def register_star_schema(self, sf_dir: str) -> dict[str, DataFrame]:
-        # remember the dir so SessionEngine clones can replay the
-        # registration into their own temp-view catalog (a DataFrame
-        # is bound to the session that built it, so the views cannot
-        # simply be shared)
-        self._star_sf_dirs = getattr(self, "_star_sf_dirs", []) + [sf_dir]
-        return register_views(self.spark, sf_dir)
+    def register_star_schema(
+        self, sf_dir: str, schemas: dict[str, StructType] | None = None
+    ) -> dict[str, DataFrame]:
+        """Register every star-schema table under ``sf_dir`` as a temp
+        view. ``schemas`` maps table names to parquet file schemas
+        already resolved for this dir; those tables are read without
+        the schema-inference job, and the rest are inferred and added.
+        The dir and its schemas are remembered so SessionEngine clones
+        can replay the registration into their own temp-view catalog
+        (a DataFrame is bound to the session that built it, so the
+        views cannot simply be shared)."""
+        schemas = {} if schemas is None else schemas
+        dfs = register_views(self.spark, sf_dir, schemas)
+        self._star_schemas.append((sf_dir, schemas))
+        return dfs
 
     def table(self, name: str) -> DataFrame:
         return self.spark.table(name)
@@ -378,9 +415,12 @@ class SessionEngine(Engine):
     (re-)registers any catalog table whose committed version it has
     not seen, so a table CREATEd or MERGEd through one session is
     queryable from every other at its latest committed version. The
-    sync is metadata-only (one pointer-file read per table). Known
-    shadowing caveat: a session temp view named like a catalog table
-    shadows it only until the table commits a new version.
+    sync launches no Spark job for a table it has already seen at its
+    current version (see :meth:`Engine._sync_catalog_views`). Opening
+    a session launches none either: the base engine's star-schema
+    views are replayed with the parquet schemas it already resolved.
+    Known shadowing caveat: a session temp view named like a catalog
+    table shadows it only until the table commits a new version.
     """
 
     def __init__(self, base: Engine):
@@ -389,7 +429,9 @@ class SessionEngine(Engine):
         if base.catalog is not None:
             cat = type(base.catalog)(clone, base.catalog.warehouse)
         super().__init__(clone, cat)
-        # replay the base engine's star-schema registrations (parquet
-        # paths, so the clone can rebuild the views itself)
-        for d in getattr(base, "_star_sf_dirs", []):
-            self.register_star_schema(d)
+        # replay the base engine's star-schema registrations: the clone
+        # rebuilds the views from the parquet paths, reading them with
+        # the base's file schemas instead of re-inferring them (one job
+        # per table)
+        for d, schemas in base._star_schemas:
+            self.register_star_schema(d, schemas)

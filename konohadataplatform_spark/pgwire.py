@@ -772,6 +772,13 @@ class PgWireServer:
         outer = self
 
         class Handler(socketserver.StreamRequestHandler):
+            # buffer each reply (RowDescription, DataRows,
+            # CommandComplete, ReadyForQuery) until the protocol's
+            # flush points, and send it without Nagle's wait for the
+            # client's delayed ACK of the previous segment
+            wbufsize = -1
+            disable_nagle_algorithm = True
+
             def handle(self) -> None:
                 try:
                     outer._handle_conn(self.rfile, self.wfile)

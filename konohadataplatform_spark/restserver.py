@@ -185,6 +185,10 @@ class RestSqlServer:
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"
+            # headers and body go out as two sends on a keep-alive
+            # connection: with Nagle on, the body waits for the
+            # client's delayed ACK of the headers (~40 ms per response)
+            disable_nagle_algorithm = True
 
             def log_message(self, *a):  # quiet
                 pass

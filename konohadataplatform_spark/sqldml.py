@@ -900,7 +900,11 @@ def dispatch(engine, query: str) -> DataFrame:
 
 
 def _refresh_and_summarize(engine, name: str, snap) -> DataFrame:
-    engine.register(name.split(".")[-1], engine.catalog.read(name))
+    # sync-managed registration, not the user pin of Engine.register:
+    # later commits to the table by other writers must stay visible to
+    # this engine's next statement
+    engine._register_view(name.split(".")[-1], engine.catalog.read(name))
+    engine._seen_versions[name] = snap.version
     return engine.spark.createDataFrame(
         [(snap.operation, name, snap.version)],
         "operation string, table string, version int",

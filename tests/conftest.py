@@ -24,9 +24,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # oracle-parity params. 47 tests, ~52% of total test-seconds.
 #
 # Full suite (closing gates): pytest -m "slowtier or not slowtier".
-# Keys are `<file>::<name>` nodeids relative to this directory;
-# a key that stops matching (renamed/removed test) is harmless — the
-# test simply runs in the default tier again.
+# Keys are `<file>::<name>` nodeids relative to this directory.
+# test_slowtier.py fails on a key that names no collected test: a
+# renamed test would otherwise silently move back into the default tier.
 # ---------------------------------------------------------------------------
 SLOWTIER = {
     "test_ingest.py::test_ingest_decontamination_gate",
@@ -79,11 +79,18 @@ SLOWTIER = {
 }
 
 
+# every collected test's SLOWTIER-style key, before -m/-k deselection
+COLLECTED_KEYS = pytest.StashKey[set]()
+
+
 def pytest_collection_modifyitems(config, items):
+    keys = set()
     for item in items:
         key = item.nodeid.rsplit("tests/", 1)[-1]
+        keys.add(key)
         if key in SLOWTIER:
             item.add_marker(pytest.mark.slowtier)
+    config.stash[COLLECTED_KEYS] = keys
 
 
 @pytest.fixture(scope="session")

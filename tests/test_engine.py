@@ -7,6 +7,8 @@ serves them, plus the §2.11 UDF registration surface.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -664,3 +666,69 @@ def test_case_insensitive_user_view_shadowing(spark, tmp_path):
     eng = Engine(spark, SnapshotCatalog(spark, wh))
     assert [r.v for r in eng.sql("SELECT v FROM shadowed").collect()] == [99]
     spark.catalog.dropTempView("shadowed")
+
+
+def _jobs_launched(spark, fn):
+    """Run ``fn`` and count the Spark jobs it launched on this thread,
+    through a job group and the status tracker — a count, so host
+    speed cannot move it."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job starts reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_statement_launches_no_job_before_its_action(spark, tmp_path):
+    """With a catalog attached and its tables already synced, building
+    a point lookup through Engine.sql launches no Spark job: the
+    temp-view listing and the version checks stay on the driver."""
+    from konohadataplatform_spark.catalog import SnapshotCatalog
+
+    s = spark.newSession()
+    eng = Engine(s, SnapshotCatalog(s, str(tmp_path / "wh")))
+    eng.register_star_schema(SF_DIR)
+    eng.save_table("picked", s.createDataFrame([(1, "a"), (2, "b")], "k long, v string"))
+    eng.sql("SELECT 1").collect()  # syncs the catalog tables
+
+    lookup, jobs = _jobs_launched(
+        s, lambda: eng.sql("SELECT o_custkey FROM orders WHERE o_orderkey = 1")
+    )
+    assert jobs == 0
+    assert len(lookup.collect()) == 1
+    picked, jobs = _jobs_launched(s, lambda: eng.sql("SELECT v FROM picked WHERE k = 2"))
+    assert jobs == 0
+    assert [r.v for r in picked.collect()] == ["b"]
+
+
+def test_session_open_launches_no_job_and_keeps_base_schemas(spark, tmp_path):
+    """SessionEngine(base) replays the base's star-schema views with
+    the parquet schemas the base resolved: no inference job, and every
+    clone view has exactly the base view's schema (events.ts
+    normalized to TIMESTAMP in both)."""
+    from konohadataplatform_spark.catalog import SnapshotCatalog
+    from konohadataplatform_spark.engine import SessionEngine
+
+    s = spark.newSession()
+    base = Engine(s, SnapshotCatalog(s, str(tmp_path / "wh")))
+    names = list(base.register_star_schema(SF_DIR))
+
+    clone, jobs = _jobs_launched(s, lambda: SessionEngine(base))
+    assert jobs == 0
+    # a clone of a clone replays the same schemas, still without a job
+    _, jobs = _jobs_launched(s, lambda: SessionEngine(clone))
+    assert jobs == 0
+
+    assert "events" in names
+    for name in names:
+        assert clone.table(name).schema == base.table(name).schema, name
+    assert isinstance(clone.table("events").schema["ts"].dataType, T.TimestampType)
+    q = "SELECT count(*) AS n, min(ts) AS lo, max(ts) AS hi FROM events"
+    assert clone.sql(q).collect() == base.sql(q).collect()

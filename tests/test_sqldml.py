@@ -615,3 +615,29 @@ def test_export_table_sql_surface(engine, spark):
 
     with pytest.raises(ValueError, match="EXPORT TABLE"):
         engine.sql("EXPORT TABLE exp_t INTO SOMEWHERE")
+
+
+def test_dml_target_keeps_syncing_with_other_writers(engine, spark, tmp_path):
+    """After DELETE FROM / MERGE INTO through Engine.sql the target
+    stays sync-managed: a later commit to it by another writer is what
+    this engine's next SELECT reads, not the view the DML left behind."""
+    seed(engine)
+    other = Engine(spark, SnapshotCatalog(spark, str(tmp_path / "wh")))
+
+    engine.sql("DELETE FROM metrics WHERE id = 1")
+    other.catalog.write(
+        "metrics",
+        spark.createDataFrame([(7, "x", 70.0)], "id long, tag string, v double"),
+    )
+    assert rows(engine.sql("SELECT * FROM metrics")) == [(7, "x", 70.0)]
+
+    src_df(engine).createOrReplaceTempView("src")
+    engine.sql(
+        "MERGE INTO metrics t USING src s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    other.catalog.delete_where("metrics", "id = 4")
+    assert rows(engine.sql("SELECT * FROM metrics")) == [
+        (2, "B", 200.0),
+        (7, "x", 70.0),
+    ]
